@@ -496,7 +496,7 @@ object Bench {
     // build-complete markers. Round 12 detached the catalog entries
     // in-JVM; the receipts still inherited the bench JVM's
     // accumulated JIT/heap/ambient state (q141 27.1 s, q150 8.58 s —
-    // both DiagS2-proven NOT the operator). Round 13 runs the leg in
+    // both shown NOT the operator in commit c473b87). Round 13 runs the leg in
     // a FRESH CHILD JVM (the literal driver-restart shape): same
     // classpath and module flags as this process, its own
     // SparkSession over the same warehouse dir, so the first sample

@@ -24,27 +24,42 @@ import org.apache.spark.sql.functions._
   * flight is plenty). Round 18 (VERDICT r17 #8): a dedicated pool,
   * shut down in a finally, replaces the shared global fork-join EC —
   * blocking Spark actions on the default pool risked starvation under
-  * nesting or many platforms. Order-preserving; failures propagate. */
+  * nesting or many platforms. Order-preserving. On the first failure,
+  * items not yet started are dropped, the running items' Spark jobs
+  * are cancelled through a per-call job tag (which leaves the caller's
+  * job group alone), and that failure is rethrown at once; a Spark job
+  * a sibling starts after the cancel still runs to its end. */
 private[graft] object Overlap {
   def inParallel[A, B](items: Seq[A], maxInFlight: Int = 3)(f: A => B): Seq[B] = {
     if (items.lengthCompare(1) <= 0) return items.map(f)
     val session = org.apache.spark.sql.SparkSession.getActiveSession
+    val tag = s"graft-overlap-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(items.length, maxInFlight))
+    val completed = new java.util.concurrent.ExecutorCompletionService[B](pool)
     try {
       val futs = items.map { a =>
-        pool.submit(new java.util.concurrent.Callable[B] {
+        completed.submit(new java.util.concurrent.Callable[B] {
           override def call(): B = {
             // active session is thread-local; pool threads inherit the
             // submitter's SparkContext properties but not the session
-            session.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
-            f(a)
+            session.foreach { s =>
+              org.apache.spark.sql.SparkSession.setActiveSession(s)
+              s.sparkContext.addJobTag(tag)
+            }
+            try f(a) finally session.foreach(_.sparkContext.removeJobTag(tag))
           }
         })
       }
-      futs.map { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      try {
+        // in completion order, so a failure surfaces while siblings run
+        futs.foreach(_ => completed.take().get())
+        futs.map(_.get())
+      } catch {
+        case e: java.util.concurrent.ExecutionException =>
+          futs.foreach(_.cancel(false))
+          session.foreach(_.sparkContext.cancelJobsWithTag(tag))
+          throw e.getCause
       }
     } finally pool.shutdown()
   }
@@ -61,72 +76,9 @@ object Pipelines {
       annot: DataFrame, flat: DataFrame, outliers: DataFrame, groups: DataFrame,
       groupA: String, groupB: String, sdFrac: Double = 0.6,
       replicates: Option[DataFrame] = None, remlIters: Int = 50,
-      remlTol: Double = 1e-8): DataFrame = {
-    val perDataset = datasets.map { case (name, probes) =>
-      val cleaned = Filters.keepReliableProbes(
-        Filters.removeOutliers(probes, outliers), flat, "probe")
-      name -> Dedup.maxVarianceDedup(cleaned, annot, "probe", "gene_id")
-    }
-    // Stage-file boundary #0 (the reference writes the combined
-    // pre-ComBat matrix here, GenExpressionComb's .exp hand-off):
-    // materialize the bound gene×sample matrix BEFORE ComBat. ComBat's
-    // front end runs several actions (standardization scalars, the
-    // persisted z build), and without this boundary each one re-ran
-    // the fact-scan → per-dataset aggregation → dedup → bind lineage —
-    // invisible at sf0.1 (overhead-bound) but the DOMINANT cost at the
-    // 100× probe, where every re-execution is a full fact-table CPU
-    // pass (docs/SCALING.md, round 8). The matrix is gene×sample-
-    // bounded, so the checkpoint is cheap at any corpus scale.
-    val bound = ExpressionMatrix(Workspace.stageCheckpoint(
-      SetOps.bindDatasets(perDataset)
-        .select("gene_id", "sample_id", "value", "dataset"), "bind_closed"))
-    // Stage-file boundary (the reference writes Comb_*.exp here):
-    // eagerly materialize the ComBat output BEFORE the SD filters —
-    // the zero-variance and top-SD filters are multi-branch plans
-    // (aggregate + semi-join), and without the checkpoint each branch
-    // re-executes the whole dedup→bind→ComBat lineage inside one
-    // action. A second checkpoint freezes the filtered matrix that the
-    // REML sweeps and the DE fit then hit with several actions each.
-    // ([[Workspace.stageCheckpoint]]: reliable parquet boundary tables
-    // when spark.graft.checkpoint.dir is set, localCheckpoint else.)
-    val adjusted = ExpressionMatrix(Workspace.stageCheckpoint(Batch.combat(
-        ExpressionMatrix(bound.df.select("gene_id", "sample_id", "value")),
-        bound.df.select(col("sample_id"), col("dataset").as("batch")).distinct())
-      .canonical.df, "comb_closed"))
-    val filtered = ExpressionMatrix(Workspace.stageCheckpoint(
-      Filters.topFracBySdNonZero(adjusted, sdFrac)
-        .canonical.df, "comb_closed_filtered"))
-    // REML arrayWeights enter the fit as WLS sufficient statistics;
-    // with technical replicates declared, the fit is the exact GLS
-    // with the REML duplicateCorrelation consensus — limma's
-    // `lmFit(eset, design, weights=arrayw, block=...,
-    // correlation=corfit$consensus)` gls.series branch
-    // (DiffExpression_closedPlatform.R:456-507)
-    val stats = replicates match {
-      case Some(reps) =>
-        // the REML array-weight fit and the duplicate-correlation
-        // consensus are INDEPENDENT eager fits over the same filtered
-        // matrix — overlap them on the bounded pool (round 18, guide
-        // §2.6) so the consensus' keyed aggregations back-fill the
-        // sweep jobs' idle tails; both results are deterministic, so
-        // output is unchanged
-        val Seq(weightsAny, rhoAny) = Overlap.inParallel[() => Any, Any](Seq(
-          () => DiffExpr.arrayWeightsReml(filtered, groups,
-            maxIter = remlIters, tol = remlTol),
-          () => DiffExpr.duplicateCorrelationReml(filtered, reps, groups)._2
-        ))(_.apply())
-        val weights = weightsAny.asInstanceOf[DataFrame]
-        val rho = rhoAny.asInstanceOf[Double]
-        val obsW = filtered.canonical.df
-          .join(broadcast(weights), Seq("sample_id"))
-        DiffExpr.groupStatsGlsObs(obsW, groups, reps, rho)
-      case None => DiffExpr.groupStatsWeighted(filtered, groups,
-        DiffExpr.arrayWeightsReml(filtered, groups,
-          maxIter = remlIters, tol = remlTol))
-    }
-    DiffExpr.topTable(
-      DiffExpr.moderatedT(stats, "group", groupA, groupB).withColumnRenamed("p_mod", "p"))
-  }
+      remlTol: Double = 1e-8): DataFrame =
+    oneContrast(closedPlatformStats("closed", datasets, annot, flat, outliers, groups,
+      sdFrac, replicates, remlIters, remlTol), groupA, groupB)
 
   /** E1 multi-contrast — the reference's actual invocation shape: with
     * k ≥ 2 groups declared, ONE run fits all C(k,2) pairwise contrasts
@@ -144,46 +96,94 @@ object Pipelines {
       annot: DataFrame, flat: DataFrame, outliers: DataFrame, groups: DataFrame,
       sdFrac: Double = 0.6, replicates: Option[DataFrame] = None,
       remlIters: Int = 50, remlTol: Double = 1e-8, alpha: Double = 0.05,
-      minLfc: Double = 0.0): DataFrame = {
+      minLfc: Double = 0.0): DataFrame =
+    allContrasts(closedPlatformStats("closed_multi", datasets, annot, flat, outliers,
+      groups, sdFrac, replicates, remlIters, remlTol), alpha, minLfc)
+
+  /** Shared E1 front end up to the REML-weighted per-(gene, group)
+    * sufficient statistics — everything before the contrast shape
+    * diverges. `stage` names the checkpoint boundaries
+    * (`bind_<stage>`, `comb_<stage>`, `comb_<stage>_filtered`), which
+    * are file names under `spark.graft.checkpoint.dir`: each entry
+    * point keeps its own, so two chains in one run never overwrite
+    * each other's boundary tables. */
+  private def closedPlatformStats(stage: String, datasets: Seq[(String, ExpressionMatrix)],
+      annot: DataFrame, flat: DataFrame, outliers: DataFrame, groups: DataFrame,
+      sdFrac: Double, replicates: Option[DataFrame], remlIters: Int,
+      remlTol: Double): DataFrame = {
     val perDataset = datasets.map { case (name, probes) =>
       val cleaned = Filters.keepReliableProbes(
         Filters.removeOutliers(probes, outliers), flat, "probe")
       name -> Dedup.maxVarianceDedup(cleaned, annot, "probe", "gene_id")
     }
-    // pre-ComBat boundary — same rationale as closedPlatformDE's
-    // "bind_closed" checkpoint (SCALING.md round-8 100× probe)
+    // Stage-file boundary #0 (the reference writes the combined
+    // pre-ComBat matrix here, GenExpressionComb's .exp hand-off):
+    // materialize the bound gene×sample matrix BEFORE ComBat. ComBat's
+    // front end runs several actions (standardization scalars, the
+    // persisted z build), and without this boundary each one re-ran
+    // the fact-scan → per-dataset aggregation → dedup → bind lineage —
+    // invisible at sf0.1 (overhead-bound) but the DOMINANT cost at the
+    // 100× probe, where every re-execution is a full fact-table CPU
+    // pass (docs/SCALING.md, round 8). The matrix is gene×sample-
+    // bounded, so the checkpoint is cheap at any corpus scale.
     val bound = ExpressionMatrix(Workspace.stageCheckpoint(
       SetOps.bindDatasets(perDataset)
-        .select("gene_id", "sample_id", "value", "dataset"), "bind_closed_multi"))
+        .select("gene_id", "sample_id", "value", "dataset"), s"bind_$stage"))
+    // Stage-file boundary (the reference writes Comb_*.exp here):
+    // eagerly materialize the ComBat output BEFORE the SD filters —
+    // the zero-variance and top-SD filters are multi-branch plans
+    // (aggregate + semi-join), and without the checkpoint each branch
+    // re-executes the whole dedup→bind→ComBat lineage inside one
+    // action. A second checkpoint freezes the filtered matrix that the
+    // REML sweeps and the DE fit then hit with several actions each.
+    // ([[Workspace.stageCheckpoint]]: reliable parquet boundary tables
+    // when spark.graft.checkpoint.dir is set, localCheckpoint else.)
     val adjusted = ExpressionMatrix(Workspace.stageCheckpoint(Batch.combat(
         ExpressionMatrix(bound.df.select("gene_id", "sample_id", "value")),
         bound.df.select(col("sample_id"), col("dataset").as("batch")).distinct())
-      .canonical.df, "comb_closed_multi"))
+      .canonical.df, s"comb_$stage"))
     val filtered = ExpressionMatrix(Workspace.stageCheckpoint(
       Filters.topFracBySdNonZero(adjusted, sdFrac)
-        .canonical.df, "comb_closed_multi_filtered"))
-    val stats = replicates match {
+        .canonical.df, s"comb_${stage}_filtered"))
+    // REML arrayWeights enter the fit as WLS sufficient statistics;
+    // with technical replicates declared, the fit is the exact GLS
+    // with the REML duplicateCorrelation consensus — limma's
+    // `lmFit(eset, design, weights=arrayw, block=...,
+    // correlation=corfit$consensus)` gls.series branch
+    // (DiffExpression_closedPlatform.R:456-507)
+    def weights(): DataFrame =
+      DiffExpr.arrayWeightsReml(filtered, groups, maxIter = remlIters, tol = remlTol)
+    replicates match {
       case Some(reps) =>
-        // overlap the two independent fits — see closedPlatformDE
-        val Seq(weightsAny, rhoAny) = Overlap.inParallel[() => Any, Any](Seq(
-          () => DiffExpr.arrayWeightsReml(filtered, groups,
-            maxIter = remlIters, tol = remlTol),
-          () => DiffExpr.duplicateCorrelationReml(filtered, reps, groups)._2
-        ))(_.apply())
-        val weights = weightsAny.asInstanceOf[DataFrame]
-        val rho = rhoAny.asInstanceOf[Double]
+        // the REML array-weight fit and the duplicate-correlation
+        // consensus are INDEPENDENT eager fits over the same filtered
+        // matrix — overlap them on the bounded pool (round 18, guide
+        // §2.6) so the consensus' keyed aggregations back-fill the
+        // sweep jobs' idle tails; both results are deterministic, so
+        // output is unchanged
+        val Seq(w, rho) = Overlap.inParallel[() => Any, Any](Seq(weights _,
+          () => DiffExpr.duplicateCorrelationReml(filtered, reps, groups)._2))(_.apply())
         val obsW = filtered.canonical.df
-          .join(broadcast(weights), Seq("sample_id"))
-        DiffExpr.groupStatsGlsObs(obsW, groups, reps, rho)
-      case None => DiffExpr.groupStatsWeighted(filtered, groups,
-        DiffExpr.arrayWeightsReml(filtered, groups,
-          maxIter = remlIters, tol = remlTol))
+          .join(broadcast(w.asInstanceOf[DataFrame]), Seq("sample_id"))
+        DiffExpr.groupStatsGlsObs(obsW, groups, reps, rho.asInstanceOf[Double])
+      case None => DiffExpr.groupStatsWeighted(filtered, groups, weights())
     }
-    val de = DiffExpr.moderatedTAll(stats)
-    DiffExpr.decideTests(
-      DiffExpr.bhAdjustGrouped(de, "p_mod", Seq(col("contrast")), Seq(col("gene_id"))),
-      pAdj = "p_bh", lfc = "log2fc", alpha = alpha, minLfc = minLfc)
   }
+
+  /** The two-group tail shared by E1, E2 and E3's per-platform DE:
+    * moderated t for groupA − groupB, then the BH-ranked topTable. */
+  private def oneContrast(stats: DataFrame, groupA: String, groupB: String): DataFrame =
+    DiffExpr.topTable(
+      DiffExpr.moderatedT(stats, "group", groupA, groupB).withColumnRenamed("p_mod", "p"))
+
+  /** The multi-contrast tail shared by E1 and E2: every pairwise
+    * contrast under one eBayes fit, BH per contrast, significance
+    * calls. */
+  private def allContrasts(stats: DataFrame, alpha: Double, minLfc: Double): DataFrame =
+    DiffExpr.decideTests(
+      DiffExpr.bhAdjustGrouped(DiffExpr.moderatedTAll(stats), "p_mod",
+        Seq(col("contrast")), Seq(col("gene_id"))),
+      pAdj = "p_bh", lfc = "log2fc", alpha = alpha, minLfc = minLfc)
 
   /** E2 — open-platform (RNA-seq) differential expression
     * (`GenExpressionComb_RNAseq.R` + `DiffExpression_openPlatform.R`):
@@ -200,12 +200,9 @@ object Pipelines {
   def openPlatformDE(counts: ExpressionMatrix, outliers: DataFrame,
       batches: DataFrame, groups: DataFrame, groupA: String, groupB: String,
       sdFrac: Double = 0.5, geneInfo: Option[DataFrame] = None,
-      replicates: Option[DataFrame] = None, voomSpan: Double = 0.5): DataFrame = {
-    val stats = openPlatformStats(counts, outliers, batches, groups, sdFrac,
-      geneInfo, replicates, voomSpan)
-    DiffExpr.topTable(
-      DiffExpr.moderatedT(stats, "group", groupA, groupB).withColumnRenamed("p_mod", "p"))
-  }
+      replicates: Option[DataFrame] = None, voomSpan: Double = 0.5): DataFrame =
+    oneContrast(openPlatformStats(counts, outliers, batches, groups, sdFrac,
+      geneInfo, replicates, voomSpan), groupA, groupB)
 
   /** E2 multi-contrast — the open-platform script runs the identical
     * all-pairs contrast block as E1 (`combn` + `makeContrasts` +
@@ -216,14 +213,9 @@ object Pipelines {
   def openPlatformDEMulti(counts: ExpressionMatrix, outliers: DataFrame,
       batches: DataFrame, groups: DataFrame, sdFrac: Double = 0.5,
       geneInfo: Option[DataFrame] = None, replicates: Option[DataFrame] = None,
-      voomSpan: Double = 0.5, alpha: Double = 0.05, minLfc: Double = 0.0): DataFrame = {
-    val stats = openPlatformStats(counts, outliers, batches, groups, sdFrac,
-      geneInfo, replicates, voomSpan)
-    val de = DiffExpr.moderatedTAll(stats)
-    DiffExpr.decideTests(
-      DiffExpr.bhAdjustGrouped(de, "p_mod", Seq(col("contrast")), Seq(col("gene_id"))),
-      pAdj = "p_bh", lfc = "log2fc", alpha = alpha, minLfc = minLfc)
-  }
+      voomSpan: Double = 0.5, alpha: Double = 0.05, minLfc: Double = 0.0): DataFrame =
+    allContrasts(openPlatformStats(counts, outliers, batches, groups, sdFrac,
+      geneInfo, replicates, voomSpan), alpha, minLfc)
 
   /** Shared E2 front end up to the voom-weighted per-(gene, group)
     * sufficient statistics — everything before the contrast shape
@@ -623,10 +615,7 @@ object Pipelines {
     // concurrently — each construction runs the platform's
     // hyperparameter moment collect)
     val topTables = Overlap.inParallel(platforms) { case (name, m) =>
-      val stats = DiffExpr.groupStats(m, groups)
-      name -> DiffExpr.topTable(
-        DiffExpr.moderatedT(stats, "group", groupA, groupB)
-          .withColumnRenamed("p_mod", "p"))
+      name -> oneContrast(DiffExpr.groupStats(m, groups), groupA, groupB)
     }
     metaAnalysisFromTopTables(topTables, meanIcc)
   }

@@ -17,12 +17,33 @@ import org.apache.commons.math3.special.Gamma
 object StatKernels {
   private val stdNormal = new NormalDistribution(null, 0.0, 1.0)
 
-  /** Standard normal quantile (R qnorm). */
+  /** Standard normal quantile (R qnorm). Below p = 1e-10 the
+    * commons-math form erfInv(2p − 1) loses p to the rounding of
+    * 2p − 1 (it returns −∞ from p ≈ 5.6e-17), so the lower tail uses
+    * Acklam's rational approximation refined by one Halley step. */
   def qnorm(p: Double): Double =
     if (p.isNaN) Double.NaN
     else if (p <= 0.0) Double.NegativeInfinity
     else if (p >= 1.0) Double.PositiveInfinity
+    else if (p < QnormLowerTail) qnormLowerTail(p)
     else stdNormal.inverseCumulativeProbability(p)
+
+  private val QnormLowerTail = 1e-10
+
+  private def qnormLowerTail(p: Double): Double = {
+    val q = math.sqrt(-2.0 * math.log(p))
+    val x = (((((-7.784894002430293e-03 * q - 3.223964580411365e-01) * q
+      - 2.400758277161838e+00) * q - 2.549732539343734e+00) * q
+      + 4.374664141464968e+00) * q + 2.938163982698783e+00) /
+      ((((7.784695709041462e-03 * q + 3.224671290700398e-01) * q
+        + 2.445134137142996e+00) * q + 3.754408661907416e+00) * q + 1.0)
+    // Acklam is good to 1.15e-9 relative; one Halley step on
+    // pnorm(x) = p takes it to double precision. exp(x²/2) overflows
+    // only for subnormal p, where the unrefined x is kept.
+    val u = (pnorm(x) - p) * math.sqrt(2.0 * math.Pi) * math.exp(x * x / 2.0)
+    val refined = x - u / (1.0 + x * u / 2.0)
+    if (refined.isNaN || refined.isInfinite) x else refined
+  }
 
   /** Standard normal CDF (R pnorm). */
   def pnorm(z: Double): Double =

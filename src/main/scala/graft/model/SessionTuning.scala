@@ -1,5 +1,9 @@
 package graft.model
 
+import java.io.File
+import java.nio.channels.{FileChannel, FileLock, OverlappingFileLockException}
+import java.nio.file.StandardOpenOption
+
 /** Host-level session tuning shared by every entrypoint session
   * (round 17, guide §6 "I/O and file layout").
   *
@@ -7,7 +11,8 @@ package graft.model
   * `java.io.tmpdir` (/tmp), which on this class of host is a slow
   * virtual disk — a MEASURED ~350-400 ms of the ~450-550 ms cost of
   * one tiny 32-partition shuffle job is shuffle-file I/O latency
-  * (DiagFrag floors: 1-task no-shuffle job 68-92 ms, same job + one
+  * (session-floor probes, OPTIMIZATION_r17.md "Diagnosis
+  * instruments": 1-task no-shuffle job 68-92 ms, same job + one
   * 100k-row shuffle 455-549 ms, and 213-255 ms with local dirs on
   * tmpfs). A query chain with ~30 exchanges pays that per exchange.
   * Production guidance is the same ranked choice — put shuffle dirs
@@ -32,46 +37,90 @@ object SessionTuning {
     * not trade slow shuffles for eviction pressure). */
   private val shmFreeFloorBytes = 4L << 30
 
+  /** A dir younger than this is never swept: its JVM may have created
+    * it and not yet taken its lock. */
+  private val staleDirAgeMs = 10L * 60 * 1000
+
+  private val dirLockName = ".graft-lock"
+
+  /** This JVM's lock on its own dir, held until the JVM exits. */
+  private var ownDirLock: Option[FileLock] = None
+
   /** The local-dir default for this process, or None to leave Spark's
     * stock behaviour: explicit env beats graft env beats /dev/shm
     * probe. */
   def localDir: Option[String] =
     if (sys.env.contains("SPARK_LOCAL_DIRS")) None // Spark env wins untouched
     else sys.env.get("SPARK_GRAFT_LOCAL_DIR").filter(_.nonEmpty).orElse {
-      val shm = new java.io.File("/dev/shm")
+      val shm = new File("/dev/shm")
       if (shm.isDirectory && shm.canWrite && shm.getUsableSpace > shmFreeFloorBytes) {
         // a crashed/killed JVM leaves its dir consuming RAM until a
         // reboot (deleteOnExit only runs on NORMAL shutdown and cannot
-        // remove non-empty dirs — ADVICE r17): sweep siblings whose
-        // owning pid is dead before creating ours
+        // remove non-empty dirs — ADVICE r17): sweep siblings no live
+        // JVM holds before creating ours
         sweepStaleDirs(shm)
         // per-process subdir so concurrent JVMs never share block dirs;
         // Spark removes its blockmgr/spill subdirs on clean shutdown,
         // and the startup sweep above reclaims dirs an abnormal exit
         // left behind
-        val d = new java.io.File(shm,
-          s"graft-spark-${java.lang.ProcessHandle.current().pid()}")
+        val d = new File(shm, s"graft-spark-${ProcessHandle.current().pid()}")
         d.mkdirs()
+        lockForLife(d)
         Some(d.getAbsolutePath)
       } else None
     }
 
-  /** Remove `graft-spark-<pid>` dirs whose pid no longer exists
-    * (ADVICE r17: abnormal exits orphan RAM-backed shuffle dirs). */
-  private def sweepStaleDirs(shm: java.io.File): Unit =
+  /** Lock `d`'s lock file until this JVM exits, so no other JVM's
+    * sweep removes the dir while it is in use. Best effort: a lock
+    * that cannot be taken leaves the dir unlocked. */
+  private def lockForLife(d: File): Unit = synchronized {
+    if (ownDirLock.isEmpty) {
+      // a reused dir (same pid as a dead JVM's) must look fresh to a
+      // concurrent sweep until the lock below is held
+      d.setLastModified(System.currentTimeMillis())
+      ownDirLock =
+        try Option(openLockFile(d).tryLock())
+        catch { case _: Exception => None }
+    }
+  }
+
+  private def openLockFile(d: File): FileChannel =
+    FileChannel.open(new File(d, dirLockName).toPath,
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+
+  /** Remove `graft-spark-<pid>` dirs whose JVM is gone (ADVICE r17:
+    * abnormal exits orphan RAM-backed shuffle dirs). A dir goes only
+    * when its pid is not alive here, its mtime is older than
+    * [[staleDirAgeMs]], and its lock file can be locked: a live JVM in
+    * another pid namespace sharing /dev/shm passes the pid check but
+    * holds its lock. */
+  private[graft] def sweepStaleDirs(shm: File, now: Long = System.currentTimeMillis()): Unit =
     try {
       val rx = "^graft-spark-(\\d+)$".r
       Option(shm.listFiles()).getOrElse(Array.empty).foreach { f =>
         rx.findFirstMatchIn(f.getName).foreach { m =>
           val pid = m.group(1).toLong
-          val alive = java.lang.ProcessHandle.of(pid)
+          val alive = ProcessHandle.of(pid)
             .map[java.lang.Boolean](h => h.isAlive).orElse(false)
-          if (!alive && f.isDirectory) deleteRecursively(f)
+          if (!alive && f.isDirectory && now - f.lastModified() > staleDirAgeMs)
+            deleteIfUnlocked(f)
         }
       }
     } catch { case _: Throwable => () }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  /** Delete `d` while holding its lock; keep it when the lock is held
+    * elsewhere (by another JVM, or by this one). */
+  private def deleteIfUnlocked(d: File): Unit = {
+    val ch = openLockFile(d)
+    try {
+      val lock =
+        try ch.tryLock()
+        catch { case _: OverlappingFileLockException => null }
+      if (lock != null) deleteRecursively(d)
+    } finally ch.close()
+  }
+
+  private def deleteRecursively(f: File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete()

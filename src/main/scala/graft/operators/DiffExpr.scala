@@ -29,39 +29,25 @@ object DiffExpr {
 
   /** A14 wiring — per-(gene, group) sufficient statistics under array
     * quality weights (`DiffExpression_closedPlatform.R:456-507`: limma
-    * runs `lmFit(eset, design, weights=arrayw, ...)`). Weighted mean,
-    * the unbiased weighted variance Σw(x−μ̂)²/(Σw − Σw²/Σw), and the
-    * Kish effective sample size n_eff = (Σw)²/Σw² in place of n, so
-    * noisy arrays shrink both the estimate and its evidence. Output is
-    * schema-compatible with [[groupStats]] — drop-in for
-    * [[welchT]]/[[moderatedT]]. */
+    * runs `lmFit(eset, design, weights=arrayw, ...)`): the
+    * sample-keyed (sample_id, weight) relation joined onto every
+    * observation, then [[groupStatsObsWeighted]]. Noisy arrays shrink
+    * both the estimate and its evidence. */
   def groupStatsWeighted(m: ExpressionMatrix, groups: DataFrame, weights: DataFrame,
       groupCol: String = "group"): DataFrame =
-    m.canonical.df
-      .join(broadcast(groups), Seq("sample_id"))
-      .join(broadcast(weights), Seq("sample_id"))
-      .groupBy(col("gene_id"), col(groupCol))
-      .agg(sum("weight").as("__sw"), sum(col("weight") * col("weight")).as("__sw2"),
-           sum(col("weight") * col("value")).as("__swx"),
-           sum(col("weight") * col("value") * col("value")).as("__swx2"))
-      .withColumn("mean", col("__swx") / col("__sw"))
-      // single-observation cells have zero weighted-variance df
-      // (Σw − Σw²/Σw = 0): NULL, matching var_samp's n=1 semantics
-      .withColumn("var",
-        when(col("__sw") - col("__sw2") / col("__sw") > 0,
-          (col("__swx2") - col("__swx") * col("__swx") / col("__sw")) /
-            (col("__sw") - col("__sw2") / col("__sw"))))
-      .withColumn("n", col("__sw") * col("__sw") / col("__sw2"))
-      .select(col("gene_id"), col(groupCol), col("n"), col("mean"), col("var"))
+    groupStatsObsWeighted(m.canonical.df.join(broadcast(weights), Seq("sample_id")),
+      groups, groupCol)
 
   /** A15 wiring — per-(gene, group) sufficient statistics under
     * per-OBSERVATION precision weights (limma voom: `lmFit(v$E,
     * design, weights = v$weights)`,
-    * `DiffExpression_openPlatform.R:442-457`). Same Kish effective-n
-    * algebra as [[groupStatsWeighted]] with the weight varying per
-    * cell. Input `vw` is the [[graft.operators.Normalize.voom]] output
-    * (gene_id, sample_id, value, weight); output is schema-compatible
-    * with [[groupStats]] — drop-in for [[welchT]]/[[moderatedT]]. */
+    * `DiffExpression_openPlatform.R:442-457`). Weighted mean, the
+    * unbiased weighted variance Σw(x−μ̂)²/(Σw − Σw²/Σw), and the Kish
+    * effective sample size n_eff = (Σw)²/Σw² in place of n. Input `vw`
+    * is observation-grain (gene_id, sample_id, value, weight), e.g. the
+    * [[graft.operators.Normalize.voom]] output; output is
+    * schema-compatible with [[groupStats]] — drop-in for
+    * [[welchT]]/[[moderatedT]]. */
   def groupStatsObsWeighted(vw: DataFrame, groups: DataFrame,
       groupCol: String = "group"): DataFrame =
     vw.join(broadcast(groups), Seq("sample_id"))
@@ -70,7 +56,8 @@ object DiffExpr {
            sum(col("weight") * col("value")).as("__swx"),
            sum(col("weight") * col("value") * col("value")).as("__swx2"))
       .withColumn("mean", col("__swx") / col("__sw"))
-      // single-observation cells: NULL var (see groupStatsWeighted)
+      // single-observation cells have zero weighted-variance df
+      // (Σw − Σw²/Σw = 0): NULL, matching var_samp's n=1 semantics
       .withColumn("var",
         when(col("__sw") - col("__sw2") / col("__sw") > 0,
           (col("__swx2") - col("__swx") * col("__swx") / col("__sw")) /
@@ -91,17 +78,6 @@ object DiffExpr {
     obsW.join(broadcast(arrayW.withColumnRenamed("weight", "__aw")), Seq("sample_id"))
       .withColumn("weight", col("weight") * col("__aw"))
       .drop("__aw")
-
-  /** A11 blocking wiring, fast approximation (the exact fit is
-    * [[groupStatsGlsObs]], which the chains use): each group's sample
-    * size deflates by Kish's design effect 1 + (m̄−1)ρ for m̄ technical
-    * replicates per biological unit. Kept for callers who want the
-    * one-line design-effect adjustment; diverges from limma's
-    * gls.series when block sizes are unbalanced. */
-  def deflateForBlocking(stats: DataFrame, rho: Double, repsPerUnit: Double): DataFrame = {
-    val deff = math.max(1.0, 1.0 + (repsPerUnit - 1.0) * rho)
-    stats.withColumn("n", col("n") / lit(deff))
-  }
 
   /** A11 blocking — EXACT GLS sufficient statistics (limma
     * `gls.series`: `lmFit(..., block=, correlation=corfit$consensus)`,
@@ -181,7 +157,7 @@ object DiffExpr {
            sum("__bb").as("__b"), sum("__cb").as("__c"))
       .withColumn("mean", col("__b") / col("__a"))
       // a single-observation group has no residual df: NULL var, the
-      // groupStatsWeighted convention
+      // groupStatsObsWeighted convention
       .withColumn("var", when(col("n_obs") > 1,
         (col("__c") - col("__b") * col("__b") / col("__a")) / (col("n_obs") - 1)))
       .select(col("gene_id"), col(groupCol), col("__a").as("n"), col("n_obs"),
@@ -221,57 +197,21 @@ object DiffExpr {
     * no per-gene collect. */
   def moderatedT(stats: DataFrame, groupCol: String, groupA: String, groupB: String,
       gene: String = "gene_id"): DataFrame = {
-    // GLS stats ([[groupStatsGlsObs]]) carry the true observation
-    // count separately from the effective information `n`: df comes
-    // from observations (limma's N − k), the SE term from `n`
-    val nDf = if (stats.columns.contains("n_obs")) col("n_obs") else col("n")
     // gene-grain bounded; executed TWICE (the hyperparameter moment
-    // collect below, then the returned plan) — persist so the stats
+    // collect, then the returned plan) — persist so the stats
     // lineage (for the chains: the whole upstream fit) runs once.
     // Rolling RelCache slot (round 18): metaAnalysis invokes this per
     // platform inside one query, so the per-invocation blocks roll
     // out after `keep` invocations instead of accumulating for the
     // session (VERDICT r17 #7).
     val perGene = graft.model.RelCache.holdRolling("diffexpr.moderatedt.pergene",
-      stats.filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(col(gene))
-      .agg(sum(nDf).as("n_tot"), count(lit(1)).as("k"),
-           sum((nDf - 1) * col("var")).as("ss_resid"),
-           max(when(col(groupCol) === groupA, col("mean"))).as("ma"),
-           max(when(col(groupCol) === groupB, col("mean"))).as("mb"),
-           max(when(col(groupCol) === groupA, col("n"))).as("na"),
-           max(when(col(groupCol) === groupB, col("n"))).as("nb"))
-      .filter(col("k") === 2 && col("n_tot") > 2 && col("ma").isNotNull && col("mb").isNotNull)
-      .withColumn("df_resid", col("n_tot") - 2)
-      .withColumn("s2", col("ss_resid") / col("df_resid"))
-      .filter(col("s2") > 0))
-    // method-of-moments on z = log(s2): E[z] and Var[z] give (d0, s0).
-    // Null-guarded: an empty perGene (every gene filtered) leaves all
-    // three moments NULL, and a single gene leaves zvar NULL — both
-    // degrade to the d0 = 1e6 branch over however many rows remain
-    // instead of an opaque NPE.
-    val moments = perGene
-      .select(avg(log(col("s2"))).as("zbar"), var_samp(log(col("s2"))).as("zvar"),
-              avg(col("df_resid").cast("double")).as("dbar"))
-      .collect()(0)
-    val zbar = if (moments.isNullAt(0)) 0.0 else moments.getDouble(0)
-    val zvar = if (moments.isNullAt(1)) 0.0 else moments.getDouble(1)
-    val dbar = if (moments.isNullAt(2)) 1.0 else moments.getDouble(2)
-    // Var[log s2] = trigamma(d/2) + trigamma(d0/2) => d0 via trigamma inverse
-    val evar = zvar - StatKernels.trigamma(dbar / 2.0)
-    val d0 = if (evar > 0) 2.0 * StatKernels.trigammaInverse(evar) else 1e6
-    // limma fitFDist: log s0² = ē + ψ(d0/2) − log(d0/2) with
-    // ē = mean(log s²) − ψ(d/2) + log(d/2) — i.e. the ratio inside the
-    // log is d/d0, not d0/d (Smyth 2004 eq. 3; sign error here
-    // previously inflated s0² by (d0/d)² and zeroed every moderated t)
-    val s02 = math.exp(zbar + StatKernels.digamma(d0 / 2.0) - StatKernels.digamma(dbar / 2.0) +
-      math.log(dbar / d0))
-    perGene
-      .withColumn("s2_post", (lit(d0) * lit(s02) + col("df_resid") * col("s2")) / (lit(d0) + col("df_resid")))
-      .withColumn("log2fc", col("ma") - col("mb"))
-      .withColumn("t_mod", col("log2fc") / sqrt(col("s2_post") * (lit(1.0) / col("na") + lit(1.0) / col("nb"))))
-      .withColumn("df_total", col("df_resid") + lit(d0))
-      .withColumn("p_mod", graft.functions.StatFunctions.tP2(col("t_mod"), col("df_total")))
+      residualVariance(stats.filter(col(groupCol).isin(groupA, groupB)), gene,
+          max(when(col(groupCol) === groupA, col("mean"))).as("ma"),
+          max(when(col(groupCol) === groupB, col("mean"))).as("mb"),
+          max(when(col(groupCol) === groupA, col("n"))).as("na"),
+          max(when(col(groupCol) === groupB, col("n"))).as("nb"))
+        .filter(col("k") === 2 && col("ma").isNotNull && col("mb").isNotNull))
+    moderate(perGene, eBayesPrior(perGene))
       .select(col(gene), col("log2fc"), col("t_mod"), col("df_total"), col("p_mod"))
   }
 
@@ -294,32 +234,11 @@ object DiffExpr {
       gene: String = "gene_id"): DataFrame = {
     val spark = stats.sparkSession
     import spark.implicits._
-    // see moderatedT: GLS stats split df (n_obs) from information (n)
-    val nDf = if (stats.columns.contains("n_obs")) col("n_obs") else col("n")
     // see moderatedT: two executions (moments collect + output plan);
     // rolling RelCache slot, same lifecycle rationale
     val perGene = graft.model.RelCache.holdRolling("diffexpr.moderatedtall.pergene",
-      stats
-      .groupBy(col(gene))
-      .agg(sum(nDf).as("n_tot"), count(lit(1)).as("k"),
-           sum((nDf - 1) * col("var")).as("ss_resid"))
-      .filter(col("n_tot") > col("k"))
-      .withColumn("df_resid", col("n_tot") - col("k"))
-      .withColumn("s2", col("ss_resid") / col("df_resid"))
-      .filter(col("s2") > 0))
-    // null-guarded like moderatedT: empty/single-gene moment rows
-    // degrade to the d0 = 1e6 branch instead of an NPE
-    val moments = perGene
-      .select(avg(log(col("s2"))).as("zbar"), var_samp(log(col("s2"))).as("zvar"),
-              avg(col("df_resid").cast("double")).as("dbar"))
-      .collect()(0)
-    val zbar = if (moments.isNullAt(0)) 0.0 else moments.getDouble(0)
-    val zvar = if (moments.isNullAt(1)) 0.0 else moments.getDouble(1)
-    val dbar = if (moments.isNullAt(2)) 1.0 else moments.getDouble(2)
-    val evar = zvar - StatKernels.trigamma(dbar / 2.0)
-    val d0 = if (evar > 0) 2.0 * StatKernels.trigammaInverse(evar) else 1e6
-    val s02 = math.exp(zbar + StatKernels.digamma(d0 / 2.0) - StatKernels.digamma(dbar / 2.0) +
-      math.log(dbar / d0))
+      residualVariance(stats, gene))
+    val prior = eBayesPrior(perGene)
     val labels = stats.select(col(groupCol)).distinct()
       .collect().map(_.getString(0)).sorted
     val pairs = labels.combinations(2).collect { case Array(a, b) => (a, b, s"${a}vs$b") }.toSeq
@@ -328,20 +247,71 @@ object DiffExpr {
       col("n").as("na"), col("mean").as("ma"))
     val sb = stats.select(col(gene), col(groupCol).as("__gb"),
       col("n").as("nb"), col("mean").as("mb"))
-    perGene
-      .withColumn("s2_post",
+    moderate(perGene
+        .crossJoin(pairsDf)
+        .join(sa, Seq(gene, "__ga"))
+        .join(sb, Seq(gene, "__gb"))
+        .filter(col("na") > 0 && col("nb") > 0), prior)
+      .select(col(gene), col("contrast"), col("log2fc"), col("t_mod"),
+        col("df_total"), col("p_mod"))
+  }
+
+  /** The cell-means fit's per-gene residual variance: over the gene's
+    * k group rows, df_resid = Σn − k and s2 = Σ(n−1)·var / df_resid,
+    * keeping genes with df_resid > 0 and s2 > 0. `extra` adds per-gene
+    * aggregates to the same pass. GLS stats ([[groupStatsGlsObs]])
+    * carry the true observation count `n_obs` separately from the
+    * effective information `n`: df comes from observations (limma's
+    * N − k), the SE term from `n`. */
+  private def residualVariance(stats: DataFrame, gene: String, extra: Column*): DataFrame = {
+    val nDf = if (stats.columns.contains("n_obs")) col("n_obs") else col("n")
+    stats.groupBy(col(gene))
+      .agg(sum(nDf).as("n_tot"),
+        count(lit(1)).as("k") +: sum((nDf - 1) * col("var")).as("ss_resid") +: extra: _*)
+      .filter(col("n_tot") > col("k"))
+      .withColumn("df_resid", col("n_tot") - col("k"))
+      .withColumn("s2", col("ss_resid") / col("df_resid"))
+      .filter(col("s2") > 0)
+  }
+
+  /** limma's eBayes prior fit (`fitFDist`) over a per-gene
+    * (s2, df_resid) relation: method of moments on z = log s², whose
+    * mean and variance give (d0, s0²). Null-guarded: an empty relation
+    * (every gene filtered) leaves all three moments NULL, and a single
+    * gene leaves zvar NULL — both degrade to the d0 = 1e6 branch over
+    * however many rows remain instead of an opaque NPE. */
+  private def eBayesPrior(perGene: DataFrame): (Double, Double) = {
+    val moments = perGene
+      .select(avg(log(col("s2"))).as("zbar"), var_samp(log(col("s2"))).as("zvar"),
+              avg(col("df_resid").cast("double")).as("dbar"))
+      .collect()(0)
+    val zbar = if (moments.isNullAt(0)) 0.0 else moments.getDouble(0)
+    val zvar = if (moments.isNullAt(1)) 0.0 else moments.getDouble(1)
+    val dbar = if (moments.isNullAt(2)) 1.0 else moments.getDouble(2)
+    // Var[log s2] = trigamma(d/2) + trigamma(d0/2) => d0 via trigamma inverse
+    val evar = zvar - StatKernels.trigamma(dbar / 2.0)
+    val d0 = if (evar > 0) 2.0 * StatKernels.trigammaInverse(evar) else 1e6
+    // limma fitFDist: log s0² = ē + ψ(d0/2) − log(d0/2) with
+    // ē = mean(log s²) − ψ(d/2) + log(d/2) — i.e. the ratio inside the
+    // log is d/d0, not d0/d (Smyth 2004 eq. 3; sign error here
+    // previously inflated s0² by (d0/d)² and zeroed every moderated t)
+    val s02 = math.exp(zbar + StatKernels.digamma(d0 / 2.0) - StatKernels.digamma(dbar / 2.0) +
+      math.log(dbar / d0))
+    (d0, s02)
+  }
+
+  /** The moderated t of contrast (ma, na) − (mb, nb) under the prior:
+    * posterior variance s2_post shrinks s2 toward s0² with weight d0,
+    * and the t gets df_resid + d0 degrees of freedom. */
+  private def moderate(df: DataFrame, prior: (Double, Double)): DataFrame = {
+    val (d0, s02) = prior
+    df.withColumn("s2_post",
         (lit(d0) * lit(s02) + col("df_resid") * col("s2")) / (lit(d0) + col("df_resid")))
-      .crossJoin(pairsDf)
-      .join(sa, Seq(gene, "__ga"))
-      .join(sb, Seq(gene, "__gb"))
-      .filter(col("na") > 0 && col("nb") > 0)
       .withColumn("log2fc", col("ma") - col("mb"))
       .withColumn("t_mod", col("log2fc") /
         sqrt(col("s2_post") * (lit(1.0) / col("na") + lit(1.0) / col("nb"))))
       .withColumn("df_total", col("df_resid") + lit(d0))
       .withColumn("p_mod", graft.functions.StatFunctions.tP2(col("t_mod"), col("df_total")))
-      .select(col(gene), col("contrast"), col("log2fc"), col("t_mod"),
-        col("df_total"), col("p_mod"))
   }
 
   /** A11 blocking — duplicateCorrelation, exact REML estimator
@@ -387,30 +357,6 @@ object DiffExpr {
         greatest(lit(-0.999), least(lit(0.999),
           col("__su2") / (col("__su2") + col("__msw")))))
       .select(col("gene_id"), col("r"))
-    val consensus = perGene
-      .agg(avg(lit(0.5) * log((lit(1.0) + col("r")) / (lit(1.0) - col("r")))))
-      .head().getDouble(0)
-    (perGene, math.tanh(consensus))
-  }
-
-  /** A11 blocking — duplicateCorrelation
-    * (`DiffExpression_closedPlatform.R:489-507`, limma
-    * `duplicateCorrelation`): consensus intra-replicate correlation.
-    * Fast approximation (the exact estimator is
-    * [[duplicateCorrelationReml]], which the E1 chain uses):
-    * per gene, the Pearson correlation across biological units between
-    * technical replicate 1 and 2 values; consensus = tanh of the mean
-    * Fisher z over genes. `replicates` maps sample_id → (unit, rep).
-    * One aggregation per step, fully distributed until the scalar. */
-  def duplicateCorrelation(m: ExpressionMatrix, replicates: DataFrame): (DataFrame, Double) = {
-    val wide = m.canonical.df.join(broadcast(replicates), Seq("sample_id"))
-      .groupBy(col("gene_id"), col("unit"))
-      .agg(max(when(col("rep") === 1, col("value"))).as("v1"),
-           max(when(col("rep") === 2, col("value"))).as("v2"))
-      .filter(col("v1").isNotNull && col("v2").isNotNull)
-    val perGene = wide.groupBy("gene_id")
-      .agg(corr("v1", "v2").as("r"), count(lit(1)).as("n_units"))
-      .filter(col("r").isNotNull && abs(col("r")) < 1.0)
     val consensus = perGene
       .agg(avg(lit(0.5) * log((lit(1.0) + col("r")) / (lit(1.0) - col("r")))))
       .head().getDouble(0)
@@ -536,25 +482,6 @@ object DiffExpr {
     sampleIds.map(s => (s, w(s))).toSeq.toDF("sample_id", "weight")
   }
 
-  /** A14 — array quality weights, fast single-pass approximation (the
-    * exact estimator is [[arrayWeightsReml]], which the E1 chain
-    * uses): each array's weight is the inverse of its mean squared
-    * residual from the per-(gene, group) means, normalised to mean 1 —
-    * the same "noisy arrays count less" contract, one aggregation
-    * pass. */
-  def arrayWeights(m: ExpressionMatrix, groups: DataFrame,
-      groupCol: String = "group"): DataFrame = {
-    val withGroup = m.canonical.df.join(broadcast(groups), Seq("sample_id"))
-    val cellMeans = withGroup.groupBy("gene_id", groupCol)
-      .agg(avg("value").as("__mu"))
-    val resid = withGroup.join(cellMeans, Seq("gene_id", groupCol))
-      .withColumn("__r2", (col("value") - col("__mu")) * (col("value") - col("__mu")))
-      .groupBy("sample_id").agg(avg("__r2").as("msr"))
-      .withColumn("__w_raw", lit(1.0) / greatest(col("msr"), lit(1e-12)))
-    val meanW = resid.agg(avg("__w_raw")).head().getDouble(0)
-    resid.select(col("sample_id"), (col("__w_raw") / meanW).as("weight"))
-  }
-
   /** W5/A13 — Benjamini–Hochberg adjustment as a window program:
     * rank p ascending (deterministic tiebreak), candidate = p·n/rank,
     * adjusted = running minimum of candidates from the current row to
@@ -562,9 +489,17 @@ object DiffExpr {
     *
     * The global window is over one row per test — at scale, p-value
     * relations are ≤ genes × contrasts, far below data volume. */
-  def bhAdjust(df: DataFrame, p: String, tiebreak: Seq[Column], out: String = "p_bh"): DataFrame = {
-    val n = count(lit(1)).over(Window.partitionBy())
-    val wRank = Window.orderBy(col(p).asc +: tiebreak.map(_.asc): _*)
+  def bhAdjust(df: DataFrame, p: String, tiebreak: Seq[Column], out: String = "p_bh"): DataFrame =
+    bhWindows(df, p, Nil, tiebreak, count(lit(1)).over(Window.partitionBy()), out)
+
+  /** The BH window program shared by [[bhAdjust]], [[bhAdjustGrouped]]
+    * and the gene-grain path of [[bhAdjustScalable]]: every window is
+    * partitioned by `partCols`, and `n` is the test count of the row's
+    * partition (a window count, or a driver literal when known). */
+  private def bhWindows(df: DataFrame, p: String, partCols: Seq[Column],
+      tiebreak: Seq[Column], n: Column, out: String): DataFrame = {
+    val wRank = Window.partitionBy(partCols: _*)
+      .orderBy(col(p).asc +: tiebreak.map(_.asc): _*)
     // The running min "from here to the largest p" is expressed as a
     // GROWING frame over the reverse ordering: Spark evaluates
     // unbounded-preceding frames incrementally (O(n)), whereas an
@@ -573,13 +508,19 @@ object DiffExpr {
     // __rk is the final tie-break so the reverse ordering is the exact
     // mirror of the ranking order even when (p, tiebreak) has
     // duplicate keys.
-    val wRevCum = Window.orderBy(col(p).desc +: tiebreak.map(_.desc) :+ col("__rk").desc: _*)
+    val wRevCum = Window.partitionBy(partCols: _*)
+      .orderBy(col(p).desc +: tiebreak.map(_.desc) :+ col("__rk").desc: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df.withColumn("__n", n)
       .withColumn("__rk", row_number().over(wRank))
       .withColumn(out, least(lit(1.0), min(col(p) * col("__n") / col("__rk")).over(wRevCum)))
       .drop("__n", "__rk")
   }
+
+  /** Largest p relation [[bhAdjustScalable]] adjusts in one
+    * single-partition window: gene × contrast tables fit below it,
+    * data-sized relations take the stitch. */
+  private val BhSmallMax = 100000L
 
   /** W5/A13 at data scale — BH without the single-partition global
     * window of [[bhAdjust]]: range-partition on the ranking key, take
@@ -608,26 +549,17 @@ object DiffExpr {
     // count picks the path below, making the operator scale-adaptive
     // instead of paying the multi-stage stitch on gene-grain inputs.
     val n = base.count()
-    val smallMax = spark.conf.getOption("spark.graft.bh.smallThreshold")
-      .map(_.toLong).getOrElse(100000L)
-    val orderAsc = col(p).asc +: tiebreak.map(_.asc)
-    if (n <= smallMax) {
+    if (n <= BhSmallMax) {
       // gene-grain input: the [[bhAdjust]] window program with the
       // known n injected — numerically identical (same p·n/rank
       // candidates, same running min; DiffExprSpec pins both paths),
       // one single-task sort instead of the stitch's range exchange +
       // two persisted window passes + two broadcast joins. The
-      // single-partition window is exactly what `n ≤ smallMax` makes
+      // single-partition window is exactly what `n ≤ BhSmallMax` makes
       // safe; data-sized relations take the stitch below.
-      val wRank = Window.orderBy(orderAsc: _*)
-      val wRevCum = Window.orderBy(
-          col(p).desc +: tiebreak.map(_.desc) :+ col("__rk").desc: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      base.withColumn("__rk", row_number().over(wRank))
-        .withColumn(out,
-          least(lit(1.0), min(col(p) * lit(n) / col("__rk")).over(wRevCum)))
-        .drop("__rk")
+      bhWindows(base, p, Nil, tiebreak, lit(n), out)
     } else {
+      val orderAsc = col(p).asc +: tiebreak.map(_.asc)
       val ranged = base.repartitionByRange(parts, orderAsc: _*)
         .withColumn("__pid", spark_partition_id())
       val wLocal = Window.partitionBy("__pid").orderBy(orderAsc: _*)
@@ -664,18 +596,9 @@ object DiffExpr {
     * contrast), so the windows are gene-grain bounded — the shape the
     * multi-contrast chain needs at scale. */
   def bhAdjustGrouped(df: DataFrame, p: String, partCols: Seq[Column],
-      tiebreak: Seq[Column], out: String = "p_bh"): DataFrame = {
-    val n = count(lit(1)).over(Window.partitionBy(partCols: _*))
-    val wRank = Window.partitionBy(partCols: _*)
-      .orderBy(col(p).asc +: tiebreak.map(_.asc): _*)
-    val wRevCum = Window.partitionBy(partCols: _*)
-      .orderBy(col(p).desc +: tiebreak.map(_.desc) :+ col("__rk").desc: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__n", n)
-      .withColumn("__rk", row_number().over(wRank))
-      .withColumn(out, least(lit(1.0), min(col(p) * col("__n") / col("__rk")).over(wRevCum)))
-      .drop("__n", "__rk")
-  }
+      tiebreak: Seq[Column], out: String = "p_bh"): DataFrame =
+    bhWindows(df, p, partCols, tiebreak,
+      count(lit(1)).over(Window.partitionBy(partCols: _*)), out)
 
   /** A13 — decideTests: significance call at (α, lfc) thresholds. */
   def decideTests(df: DataFrame, pAdj: String = "p_bh", lfc: String = "log2fc",

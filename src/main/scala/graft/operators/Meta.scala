@@ -85,10 +85,16 @@ object Meta {
     * w_i = |FC_i| + |FC_i|·ICC_i², combined
     * Z = Σ √|FC_i| z_i / √Σ w_i (the reference's exact weighting,
     * `Meta_analysis.R:105-121`), combined p = 2·pnorm(−|Z|).
-    * Requires membership in ≥ 2 platforms (`:1218`). */
+    * Requires membership in ≥ 2 platforms (`:1218`).
+    *
+    * Where 1 − p/2 rounds to 1 (p below about 2.2e-16) qnorm(1 − p/2)
+    * would be +∞, so there z_i takes the same quantile as −qnorm(p/2),
+    * which is finite. p = 0 exactly still gives z_i = ±∞, as in R. */
   def weightedStouffer(perPlatform: DataFrame, gene: String = "gene_id",
       p: String = "p", fc: String = "log2fc", icc: String = "icc"): DataFrame = {
-    val z = signum(col(fc)) * StatFunctions.qnorm(lit(1.0) - col(p) / 2)
+    val half = col(p) / 2
+    val z = signum(col(fc)) * when(lit(1.0) - half === 1.0, -StatFunctions.qnorm(half))
+      .otherwise(StatFunctions.qnorm(lit(1.0) - half))
     val wgt = abs(col(fc)) + abs(col(fc)) * col(icc) * col(icc)
     perPlatform
       .withColumn("__z", z).withColumn("__w", wgt)

@@ -27,25 +27,21 @@ class DiffExprSpec extends SparkSpec {
   }
 
   test("bhAdjustScalable is numerically identical to bhAdjust (both paths)") {
-    // 500 rows across many range partitions, with tied p-values so the
-    // partition-boundary tie handling is exercised. Round 18: the
-    // operator picks a single-window path for small inputs and the
-    // range-partitioned stitch above spark.graft.bh.smallThreshold —
-    // BOTH must equal the reference window program.
-    val df = (1 to 500).map(i => (i, ((i * 131) % 97) / 97.0)).toDF("id", "p")
-      .repartition(7)
-    val simple = DiffExpr.bhAdjust(df, "p", Seq(col("id")))
-      .orderBy("id").select("p_bh").as[Double].collect()
-    assert(simple.length == 500)
-    for (threshold <- Seq("100000", "0")) { // small path, then forced stitch
-      spark.conf.set("spark.graft.bh.smallThreshold", threshold)
-      try {
-        val scalable = DiffExpr.bhAdjustScalable(df, "p", Seq(col("id")))
-          .orderBy("id").select("p_bh").as[Double].collect()
-        assert(scalable.length == 500, s"threshold=$threshold")
-        simple.zip(scalable).foreach { case (a, b) =>
-          assert(a == b, s"threshold=$threshold") }
-      } finally spark.conf.unset("spark.graft.bh.smallThreshold")
+    // Tied p-values, so the partition-boundary tie handling is
+    // exercised. The operator adjusts relations of up to 100,000 rows
+    // in one window and stitches range partitions above that: 500 rows
+    // take the window, 100,500 rows the stitch. BOTH must equal the
+    // reference window program exactly.
+    for (rows <- Seq(500L, 100500L)) {
+      val df = spark.range(1, rows + 1)
+        .select(col("id"), ((col("id") * 131) % 97 / 97.0).as("p"))
+        .repartition(7)
+      val simple = DiffExpr.bhAdjust(df, "p", Seq(col("id")))
+        .orderBy("id").select("p_bh").as[Double].collect()
+      val scalable = DiffExpr.bhAdjustScalable(df, "p", Seq(col("id")))
+        .orderBy("id").select("p_bh").as[Double].collect()
+      assert(simple.length == rows && scalable.length == rows, s"rows=$rows")
+      simple.zip(scalable).foreach { case (a, b) => assert(a == b, s"rows=$rows") }
     }
   }
 

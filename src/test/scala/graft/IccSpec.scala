@@ -43,37 +43,6 @@ class IccSpec extends SparkSpec {
       assert(math.abs(got(g) - e) < 1e-9, s"$g: got ${got(g)} expected $e")
   }
 
-  test("arrayWeights downweights a noisy array") {
-    val rows = for (g <- 1 to 30; s <- 1 to 6) yield {
-      val grp = if (s <= 3) "A" else "B"
-      val noise = if (s == 6) ((g * 17) % 13 - 6) * 1.0 else ((g * 7 + s) % 5 - 2) * 0.1
-      (s"g$g", s"s$s", 5.0 + g * 0.1 + noise, grp)
-    }
-    val m = ExpressionMatrix(rows.map(r => (r._1, r._2, r._3)).toDF("gene_id", "sample_id", "value"))
-    val groups = rows.map(r => (r._2, r._4)).distinct.toDF("sample_id", "group")
-    val w = DiffExpr.arrayWeights(m, groups).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(w("s6") < w("s1"), s"noisy array not downweighted: $w")
-    assert(math.abs(w.values.sum / w.size - 1.0) < 1e-9)
-  }
-
-  test("duplicateCorrelation finds high consensus for correlated replicates") {
-    // replicate 2 = replicate 1 + small noise -> high consensus;
-    // independent pair -> low
-    val rows = for (g <- 1 to 20; u <- 1 to 8; rep <- 1 to 2) yield {
-      val base = g * 1.0 + u * 0.5 + ((g * 7 + u * 3) % 5) * 0.4
-      val v = if (rep == 1) base else base + ((g + u) % 3) * 0.05
-      (s"g$g", s"u$u-r$rep", v, s"u$u", rep)
-    }
-    val m = ExpressionMatrix(rows.map(r => (r._1, r._2, r._3))
-      .toDF("gene_id", "sample_id", "value"))
-    val reps = rows.map(r => (r._2, r._4, r._5)).distinct
-      .toDF("sample_id", "unit", "rep")
-    val (perGene, consensus) = DiffExpr.duplicateCorrelation(m, reps)
-    assert(perGene.count() > 0)
-    assert(consensus > 0.9, s"expected high consensus, got $consensus")
-  }
-
   test("groupStatsWeighted: unit weights reproduce groupStats; downweighting shrinks evidence") {
     val rows = for (g <- 1 to 10; s <- 1 to 6) yield {
       val grp = if (s <= 3) "A" else "B"
@@ -94,7 +63,7 @@ class IccSpec extends SparkSpec {
     }
     // downweight the noisy array s6: group B's variance must drop and
     // its effective n must fall below the unweighted count
-    val w = DiffExpr.arrayWeights(m, groups)
+    val w = (1 to 6).map(s => (s"s$s", if (s == 6) 0.1 else 1.0)).toDF("sample_id", "weight")
     val dw = DiffExpr.groupStatsWeighted(m, groups, w)
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getDouble(2), r.getDouble(4))).toMap
     val avgVarB = plain.collect { case ((g, "B"), (_, _, v)) => v }.sum / 10
@@ -301,24 +270,18 @@ class IccSpec extends SparkSpec {
     }
   }
 
-  test("blocking deflation widens the moderated-t confidence exactly when rho > 0") {
-    val rows = for (g <- 1 to 30; s <- 1 to 12) yield {
-      val grp = if (s <= 6) "A" else "B"
-      val eff = if (grp == "A") 1.5 else 0.0
-      (s"g$g", s"s$s", 10.0 + g * 0.05 + eff + ((g * 11 + s * 5) % 7 - 3) * 0.3, grp)
-    }
-    val m = ExpressionMatrix(rows.map(r => (r._1, r._2, r._3)).toDF("gene_id", "sample_id", "value"))
-    val groups = rows.map(r => (r._2, r._4)).distinct.toDF("sample_id", "group")
-    val stats = DiffExpr.groupStats(m, groups)
-      .withColumn("n", col("n").cast("double"))
-    def meanAbsT(rho: Double): Double = {
-      val adj = DiffExpr.deflateForBlocking(stats, rho, repsPerUnit = 2.0)
-      DiffExpr.welchT(adj, "group", "A", "B")
-        .agg(avg(abs(col("t")))).head().getDouble(0)
-    }
-    val t0 = meanAbsT(0.0)
-    val t5 = meanAbsT(0.5)
-    val t9 = meanAbsT(0.9)
-    assert(t0 > t5 && t5 > t9, s"expected |t| monotone decreasing in rho: $t0, $t5, $t9")
+  test("weightedStouffer: finite z for p = 1e-20, infinite z for p = 0") {
+    // qnorm(1 - 1e-20/2) rounds to qnorm(1) = +Inf; the combined z must
+    // instead use the finite quantile qnorm(1 - 5e-21) = 9.33604484923406.
+    // Expected z_comb = (sqrt(2)*9.33604484923406 + sqrt(1.5)*qnorm(0.9))
+    // / sqrt(2.5 + 1.875), computed at 50 digits.
+    val df = Seq(("tiny", 0.5, 1e-20, 2.0), ("tiny", 0.5, 0.2, 1.5),
+        ("zero", 0.5, 0.0, 2.0), ("zero", 0.5, 0.2, 1.5))
+      .toDF("gene_id", "icc", "p", "log2fc")
+    val z = Meta.weightedStouffer(df).collect()
+      .map(r => r.getAs[String]("gene_id") -> r.getAs[Double]("z_comb")).toMap
+    assert(math.abs(z("tiny") - 7.0627181811145038) < 1e-9, s"z_comb = ${z("tiny")}")
+    // p = 0 exactly is an infinite z, as R's qnorm(1) is
+    assert(z("zero") == Double.PositiveInfinity)
   }
 }
